@@ -69,22 +69,26 @@ _ROWS_CACHE: dict[tuple[str, int, int], list] = {}
 # meta block (centroid tables at n_centroids <= 256) and far below any
 # corpus. Enforced through a LIMIT read, so an oversized table fails
 # after transferring at most bound+1 rows — never after collecting the
-# whole corpus into the driver first.
+# whole corpus into the driver first. It is the default bound: a table
+# whose size its artifact records (a PQ codebook) passes its own.
 META_ROWS_MAX = 4096
 
 
-def read_meta_rows(spark: SparkSession, path: str) -> list:
+def read_meta_rows(spark: SparkSession, path: str,
+                   max_rows: int = META_ROWS_MAX) -> list:
     """Collect a SMALL parquet parameter table (an index ``meta/``
     block), cached by file identity. Only for bounded parameter tables
-    (≤ ``META_ROWS_MAX`` rows, enforced) — a corpus read through this
-    would pin corpus rows in driver memory, so it raises instead."""
+    (≤ ``max_rows`` rows, enforced) — a corpus read through this
+    would pin corpus rows in driver memory, so it raises instead. A
+    caller whose table is bounded by its own recorded shape (a PQ
+    codebook holds m·n_codes rows) passes that bound per call."""
     key = _stat_key(path)
-    if key is not None and key in _ROWS_CACHE:
-        return _ROWS_CACHE[key]
-    rows = read_parquet(spark, path).limit(META_ROWS_MAX + 1).collect()
-    if len(rows) > META_ROWS_MAX:
+    rows = _ROWS_CACHE.get(key) if key is not None else None
+    if rows is None:
+        rows = read_parquet(spark, path).limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
         raise ValueError(
-            f"read_meta_rows({path!r}): more than {META_ROWS_MAX} rows — "
+            f"read_meta_rows({path!r}): more than {max_rows} rows — "
             "this helper is for bounded index-parameter tables only; "
             "read corpus-sized data with read_parquet and keep it "
             "distributed")

@@ -4,7 +4,11 @@ Every function here is a pure ``Column -> Column`` built from native
 Catalyst expressions — the reference implements these as row-at-a-time
 Python UDFs (``/root/reference/src/transform/clean_abr.py:243-248``,
 ``clean_commoncrawl.py:180-183``), which puts a Python round-trip in the
-hot path of every row. Native expressions stay inside whole-stage codegen.
+hot path of every row. Native expressions compile into whole-stage
+codegen, but a filter on a column built from them is pushed below its
+projection and re-evaluates the whole chain per reference, with no
+common-subexpression elimination: pipelines compute such columns once
+(``operators.staging.compute_once``) before filtering on them.
 
 Parity notes (SURVEY §7.4.1), validated by differential testing against the
 executed reference functions:

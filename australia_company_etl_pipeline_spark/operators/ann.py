@@ -875,7 +875,8 @@ def _bounded_probe_collect(probes: DataFrame, key_col: str,
                           qsize.alias("__qs"))
             .limit(_PROBE_COLLECT_MAX + 1).collect())
     if len(rows) <= _PROBE_COLLECT_MAX:
-        keys = list({r["__k"] for r in rows})
+        # collect_set on the aggregate path skips NULL keys; so does this
+        keys = list({r["__k"] for r in rows if r["__k"] is not None})
         sizes = [r["__qs"] for r in rows if r["__qs"] is not None]
         return (keys, min(sizes) if sizes else None,
                 max(sizes) if sizes else None)

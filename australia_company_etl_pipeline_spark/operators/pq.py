@@ -190,7 +190,9 @@ def build_pq_index(corpus: DataFrame, path: str,
       (m·n_codes rows — the whole learned state);
     - ``codes/``    — ``(id, pq_codes, pq_norm)`` parquet: the corpus
       at 16-32× smaller than the float vectors; ADC probes scan THIS,
-      never the embeddings table.
+      never the embeddings table;
+    - ``meta/``     — ONE row ``(m, n_codes, dim)``: the shape that
+      bounds the driver-side codebook read at m·n_codes rows.
 
     Same crash discipline as ``ann.build_ivf_index``: both tables land
     in a pid-suffixed sibling tmp and swap in with ONE atomic rename —
@@ -210,6 +212,9 @@ def build_pq_index(corpus: DataFrame, path: str,
         rows, "subspace int, code int, centroid_vec array<double>")
      .coalesce(1).write.mode("errorifexists")
      .parquet(f"{tmp}/codebook"))
+    spark.createDataFrame([(m, n_codes, dim)],
+                          "m int, n_codes int, dim int") \
+        .write.mode("errorifexists").parquet(f"{tmp}/meta")
     (pq_encode(corpus, books, vec_col)
      .select(F.col(id_col), "pq_codes", "pq_norm")
      .write.mode("errorifexists").parquet(f"{tmp}/codes"))
@@ -218,12 +223,15 @@ def build_pq_index(corpus: DataFrame, path: str,
 
 def load_pq_codebook(spark, path: str) -> list[list[list[float]]]:
     """Read the persisted codebook back to the driver-side literal form
-    (m·n_codes rows — bounded by construction; served from the
-    metadata-row cache on repeat reads of the same artifact
-    generation)."""
+    (m·n_codes rows, the bound the read enforces — 8192 at m=32,
+    n_codes=256, past the catalog's default parameter-table bound;
+    served from the metadata-row cache on repeat reads of the same
+    artifact generation)."""
     from ..catalog import read_meta_rows
 
-    rows = read_meta_rows(spark, f"{path}/codebook")
+    meta = read_meta_rows(spark, f"{path}/meta")[0]
+    rows = read_meta_rows(spark, f"{path}/codebook",
+                          max_rows=meta["m"] * meta["n_codes"])
     m = 1 + max(r.subspace for r in rows)
     k = 1 + max(r.code for r in rows)
     books: list[list[list[float]] | None] = [[None] * k for _ in range(m)]

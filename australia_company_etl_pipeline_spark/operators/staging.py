@@ -26,6 +26,8 @@ in a 100-TB job's setup), leaving every call site untouched."""
 from __future__ import annotations
 
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _DEFAULT_NAME = "MEMORY_AND_DISK"
 
@@ -50,3 +52,31 @@ def resolve_level(storage_level=None) -> StorageLevel:
             raise ValueError(f"unknown StorageLevel {storage_level!r}")
         return getattr(StorageLevel, storage_level)
     return storage_level
+
+
+def compute_once(df: DataFrame) -> DataFrame:
+    """Evaluate every column of ``df`` once per row, in a projection,
+    and make later filters read the computed values.
+
+    Catalyst pushes a ``filter`` on a derived column below the
+    projection that computes it and substitutes the column's whole
+    expression tree into the predicate (plus an inferred ``IS NOT
+    NULL`` copy). Spark's Filter code generation has no common
+    subexpression elimination, so the tree runs once per reference.
+    Measured with Spark 4.1.2 on a 4-vCPU host, local[2], 200k rows, a
+    six-``regexp_replace`` chain: 1.7 s computed in a Project, whether
+    read once or 8 times; 17.7 s when a pushed Filter read it 8 times;
+    1.7 s again behind this barrier. On the ER source and clean path
+    the pushed filters held ``from_xml`` 441 times and
+    ``regexp_replace`` 912 times.
+
+    Routing the row through ``inline(array(struct(cols)))`` makes the
+    columns generator outputs: no predicate can be pushed below a
+    Generate that produces the columns it reads, and the projection
+    underneath keeps its own subexpression elimination. Names, types
+    and nullability pass through unchanged.
+
+    The barrier also stops column pruning: every column is computed
+    even when nothing downstream reads it. Put it only where every
+    column flows on."""
+    return df.select(F.inline(F.array(F.struct(*df.columns))))

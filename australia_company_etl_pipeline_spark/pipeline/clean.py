@@ -3,8 +3,11 @@
 DataFrame-in → DataFrame-out twins of the reference's ``clean_*_spark``
 (``/root/reference/src/transform/clean_commoncrawl.py:165-205`` and
 ``clean_abr.py:228-282``) with every row-at-a-time Python UDF replaced by
-the native expressions in ``..functions`` — the whole cleaning stage stays
-inside whole-stage codegen, no Python boundary.
+the native expressions in ``..functions`` — no Python boundary. Each
+pipeline computes its cleaned columns once per row (``compute_once``)
+and only then filters on them: a filter on a derived column is
+otherwise pushed below the projection and re-runs the column's whole
+regex chain for every reference (``operators/staging.py``).
 
 Dedup note: the reference's ``dropDuplicates([key])`` keeps an arbitrary
 row (partition-order dependent). ``deterministic=True`` (default) keeps the
@@ -19,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import functions as fx
+from ..operators.staging import compute_once
 
 
 def dedup_by_key(df: DataFrame, keys: list[str], order_by: list[str],
@@ -39,11 +43,13 @@ def clean_web_companies(df: DataFrame, deterministic: bool = True) -> DataFrame:
     clean name → normalize → extract domain → standardize industry →
     drop null/empty names → block key → dedup by normalized_name.
     """
-    cleaned = (df
-               .withColumn("company_name", fx.clean_company_name(F.col("company_name")))
-               .withColumn("normalized_name", fx.normalize_company_name(F.col("company_name")))
-               .withColumn("domain", fx.extract_domain(F.col("url")))
-               .withColumn("industry", fx.clean_industry(F.col("industry")))
+    cleaned = compute_once(
+        df
+        .withColumn("company_name", fx.clean_company_name(F.col("company_name")))
+        .withColumn("normalized_name", fx.normalize_company_name(F.col("company_name")))
+        .withColumn("domain", fx.extract_domain(F.col("url")))
+        .withColumn("industry", fx.clean_industry(F.col("industry"))))
+    cleaned = (cleaned
                .filter(F.col("company_name").isNotNull())
                .filter(F.col("normalized_name") != "")
                # spark-twin block key: plain substr, no length guard
@@ -81,13 +87,18 @@ def clean_abr_entities(df: DataFrame, deterministic: bool = True,
             F.when(low.contains("active"), "Active")
             .when(low.contains("cancel"), "Cancelled")
             .otherwise(F.col("entity_status")))
-        if active_only:
-            cleaned = cleaned.filter(F.col("entity_status") == "Active")
     if "start_date" in cols:
         cleaned = cleaned.withColumn(
             "start_date", fx.parse_date_multi(F.col("start_date")))
+    # the checksum reads the ABN's digits a dozen times: computed here,
+    # once per row, not re-run per reference inside the filter
+    cleaned = compute_once(
+        cleaned.withColumn("__abn_ok", fx.validate_abn(F.col("abn"))))
+    if active_only and "entity_status" in cols:
+        cleaned = cleaned.filter(F.col("entity_status") == "Active")
     cleaned = (cleaned
-               .filter(fx.validate_abn(F.col("abn")))
+               .filter(F.col("__abn_ok"))
+               .drop("__abn_ok")
                .filter(F.col("entity_name").isNotNull())
                .filter(F.col("normalized_name") != "")
                .withColumn("block_key",

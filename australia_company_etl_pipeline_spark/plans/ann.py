@@ -437,7 +437,8 @@ def _ann_approx_branches(spark: SparkSession, sf_dir: str,
         from ..operators import pq as pq_ops
 
         pq_path = _cached_index(
-            spark, sf_dir, "pq", "64|16|16|3|42",
+            # the last field keys the layout: codebook + codes + meta
+            spark, sf_dir, "pq", "64|16|16|3|42|meta",
             lambda p: pq_ops.build_pq_index(
                 _corpus(spark, sf_dir), p, dim=64, m=16, n_codes=16,
                 kmeans_iter=3, seed=42))

@@ -5,7 +5,8 @@ Re-expression of the reference's ``ET.iterparse`` streaming parser
 
 - record boundaries split with native regex (one ``<ABR…>…</ABR>``
   element per row), distributed per input file;
-- field shredding via ``from_xml`` with an explicit nested schema plus
+- field shredding via one ``from_xml`` per record (an explicit nested
+  schema, parsed once in its own projection) plus
   the reference's multi-path coalesce cascade (MainEntity vs LegalEntity,
   NonIndividualName vs IndividualName given+family concat);
 - ABN status/start-date from the ABN element's attributes, multi-format
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.dates import parse_date_multi
+from ..operators.staging import compute_once
 
 # Nested schema for one <ABR> record. Attribute fields use from_xml's
 # default "_" prefix; element text beside attributes lands in _VALUE.
@@ -105,11 +107,17 @@ def _address_field(r: Column, field: str) -> Column:
 def shred_abr_xml(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     """S4 — shred ABR record XML strings into the flat entity contract
     (abn, entity_name, entity_type, entity_type_code, entity_status,
-    state, postcode, start_date)."""
-    r = F.from_xml(F.col(xml_col), ABR_RECORD_SCHEMA)
+    state, postcode, start_date).
+
+    ``from_xml`` runs once per record, in its own projection, and the
+    fields are computed once from the parsed struct (``compute_once``)
+    before the ABN/name filter reads them."""
+    parsed = df.select(
+        F.from_xml(F.col(xml_col), ABR_RECORD_SCHEMA).alias("__r"))
+    r = F.col("__r")
     abn_digits = F.regexp_replace(F.coalesce(r["ABN"]["_VALUE"], F.lit("")),
                                   r"\D", "")
-    out = df.select(
+    out = compute_once(parsed.select(
         F.when(F.length(abn_digits) == 11, abn_digits).alias("abn"),
         _entity_name(r).alias("entity_name"),
         F.coalesce(r["EntityType"]["EntityTypeText"],
@@ -118,7 +126,7 @@ def shred_abr_xml(df: DataFrame, xml_col: str = "xml") -> DataFrame:
         r["ABN"]["_status"].alias("entity_status"),
         _address_field(r, "State").alias("state"),
         _address_field(r, "Postcode").alias("postcode"),
-        parse_date_multi(r["ABN"]["_ABNStatusFromDate"]).alias("start_date"))
+        parse_date_multi(r["ABN"]["_ABNStatusFromDate"]).alias("start_date")))
     # Reference drops records without ABN or name (parse_abr.py:97-110).
     return out.filter(F.col("abn").isNotNull()
                       & F.col("entity_name").isNotNull())
@@ -168,9 +176,10 @@ def read_abr_xml(spark: SparkSession, path: str) -> DataFrame:
     anchor; rows with no record start (e.g. the trailing footer) drop out.
     """
     raw = spark.read.option("lineSep", "</ABR>").text(path)
-    recs = (raw
-            .select(F.regexp_extract("value", r"(?s)<ABR[\s>].*", 0)
-                    .alias("xml"))
+    # the anchor regex runs once per frame, not again in the filter
+    recs = (compute_once(
+                raw.select(F.regexp_extract("value", r"(?s)<ABR[\s>].*", 0)
+                           .alias("xml")))
             .filter(F.col("xml") != "")
             .select(F.concat(F.col("xml"), F.lit("</ABR>")).alias("xml")))
     return shred_abr_xml(recs)

@@ -14,7 +14,8 @@ distributed Spark read + native record shredding:
   the memory profile the reference gets from incremental warcio parsing
   (parse_commoncrawl.py:79-122);
 - record headers and bodies extracted with native ``split`` /
-  ``regexp_extract`` Catalyst expressions (codegen'd);
+  ``regexp_extract`` Catalyst expressions, each evaluated once per
+  record (``operators.staging.compute_once``);
 - no Python in the record path, no driver-side funneling.
 
 The reference yields only ``conversion`` records with a
@@ -38,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.staging import compute_once
 
 # Every WARC record starts with a version line (WARC/1.0, WARC/1.1 …).
 _RECORD_SPLIT = r"(?=WARC/\d+\.\d+)"
@@ -67,6 +70,9 @@ def shred_wet_records(records: DataFrame, rec_col: str = "rec",
     first blank line), so body text that happens to contain
     ``WARC-Type:`` can't forge a header. Rows that aren't WARC records
     (no headers → NULL type/URI) drop out of the filters naturally.
+    The filters, and any a caller adds (``read_wet``'s ``.au`` gate),
+    read the shredded columns (``compute_once``) instead of re-running
+    the header and body regexes.
     """
     rec = F.regexp_replace(F.col(rec_col), _VERSION_LINE, "")
     head = F.regexp_extract(rec, _HEAD_BLOCK, 1)
@@ -75,10 +81,10 @@ def shred_wet_records(records: DataFrame, rec_col: str = "rec",
     body = F.regexp_replace(
         F.regexp_replace(F.regexp_extract(rec, _BODY, 1),
                          r"^\s+", ""), r"\s+$", "")
-    parsed = records.select(
+    parsed = compute_once(records.select(
         header(head, "WARC-Type").alias("warc_type"),
         header(head, "WARC-Target-URI").alias("url"),
-        body.alias("text"))
+        body.alias("text")))
     return (parsed
             .filter(F.col("warc_type") == record_type)
             .filter(F.col("url").isNotNull())

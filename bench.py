@@ -327,7 +327,7 @@ def _plan_guard(spark, sf_dir: str, names: list[str]) -> dict[str, bool]:
     enforce = (os.path.isdir(SF01_GOLDEN_DIR)
                and "sf0.1" in sf_dir
                and not os.environ.get("SPARK_GRAFT_SKIP_PLAN_GUARD"))
-    diverged = []
+    diverged: dict[str, str] = {}
     for name in names:
         df = plans.REGISTRY[name].builder(spark, sf_dir)
         plan = formatted_plan(df)
@@ -343,7 +343,7 @@ def _plan_guard(spark, sf_dir: str, names: list[str]) -> dict[str, bool]:
                         want.splitlines(), skel.splitlines(),
                         fromfile=f"golden_plans_sf01/{name}.txt",
                         tofile="current", lineterm=""))
-                    diverged.append(f"--- {name} ---\n{diff}")
+                    diverged[name] = diff
         _release_operator_caches()
     if diverged:
         print("PLAN GUARD: bench-scale plan skeletons diverged from "
@@ -352,7 +352,15 @@ def _plan_guard(spark, sf_dir: str, names: list[str]) -> dict[str, bool]:
               "(SPARK_GRAFT_SF01_GOLDENS=1 UPDATE_GOLDEN_PLANS=1 pytest "
               "tests/test_golden_plans.py) if the change is intentional, "
               "or set SPARK_GRAFT_SKIP_PLAN_GUARD=1.\n"
-              + "\n".join(diverged), file=sys.stderr)
+              + "\n".join(f"--- {n} ---\n{d}" for n, d in diverged.items()),
+              file=sys.stderr)
+        sys.stderr.flush()
+        # the abort leaves a headline-shaped record as the LAST stdout
+        # line, so a tail capture shows why the window has no numbers
+        print(json.dumps({"metric": "headline_queries_total", "value": None,
+                          "error": "plan_guard",
+                          "diverged": sorted(diverged)}))
+        sys.stdout.flush()
         spark.stop()
         sys.exit(2)
     return py_flags

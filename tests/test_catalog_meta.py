@@ -34,3 +34,18 @@ def test_read_meta_rows_oversized_table_raises(spark, tmp_path):
     # a failed read must not poison the cache
     key = catalog._stat_key(path)
     assert key not in catalog._ROWS_CACHE
+
+
+def test_read_meta_rows_per_call_bound(spark, tmp_path):
+    """``max_rows`` bounds one call: a tighter bound rejects a table the
+    default accepts, a looser one accepts a table the default rejects."""
+    small = str(tmp_path / "small")
+    spark.range(5).coalesce(1).write.parquet(small)
+    with pytest.raises(ValueError, match="more than 3 rows"):
+        catalog.read_meta_rows(spark, small, max_rows=3)
+    assert len(catalog.read_meta_rows(spark, small, max_rows=5)) == 5
+    big = str(tmp_path / "big")
+    spark.range(catalog.META_ROWS_MAX + 1).coalesce(1).write.parquet(big)
+    rows = catalog.read_meta_rows(spark, big,
+                                  max_rows=catalog.META_ROWS_MAX + 1)
+    assert len(rows) == catalog.META_ROWS_MAX + 1

@@ -1493,6 +1493,31 @@ def test_containment_excludes_sub_shingle_benchmark_rows(spark):
                              on_short="loud")
 
 
+def test_containment_edge_docs_same_with_benchmark_shingles(spark):
+    """Empty, NULL, sub-shingle and whitespace-only benchmark docs are
+    excluded, and a doc whose tokens sit between whitespace runs
+    shingles like its single-spaced twin — with the benchmark shingled
+    from raw text and with pre-built ``benchmark_shingles`` alike."""
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, ""), (3, None),
+         (4, "  \t  "), (5, "alpha beta")],
+        "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(900, ""), (901, None), (902, "alpha beta"), (903, " \t\n  "),
+         (904, "alpha   beta \t gamma"),
+         (905, "  alpha beta gamma delta  ")],
+        "doc_id long, text string")
+    raw = dd.containment_pairs(corpus, bench, "text", "doc_id",
+                               threshold=0.0).collect()
+    pre = dd.containment_pairs(
+        corpus, bench, "text", "doc_id", threshold=0.0,
+        benchmark_shingles=dd.shingle_frame(bench, "text", "doc_id",
+                                            persist=False)).collect()
+    dd.unpersist_shingles()
+    want = [(1, 904, 1.0), (1, 905, 1.0)]
+    assert sorted(map(tuple, raw)) == sorted(map(tuple, pre)) == want
+
+
 def test_duplicate_rate_estimate(spark):
     """The planning sketch: ~0 on all-distinct data, ≈ the true rate on
     heavily duplicated data (HLL at rsd=0.02), clamped non-negative,
@@ -2138,6 +2163,20 @@ def test_ivf_inline_probe_matches_inplan_path(spark, sf_dir, tmp_path):
                          F.slice("query_vec", 1, 3).alias("query_vec"))
     with pytest.raises(ValueError, match="dimension"):
         ann.ivf_index_topk(spark, path, bad, k=10, n_probe=2)
+
+
+def test_bounded_probe_collect_null_keys_match_agg_path(spark,
+                                                       monkeypatch):
+    """A NULL probe key is no key: the fast path drops it as the
+    aggregate path's collect_set does, so both return the same keys."""
+    df = spark.createDataFrame(
+        [(1, 1.0), (None, 2.0), (2, 3.0), (None, None)],
+        "k int, qs double")
+    fast = ann._bounded_probe_collect(df, "k", F.col("qs"))
+    monkeypatch.setattr(ann, "_PROBE_COLLECT_MAX", 0)
+    slow = ann._bounded_probe_collect(df, "k", F.col("qs"))
+    assert sorted(fast[0]) == sorted(slow[0]) == [1, 2]
+    assert fast[1:] == slow[1:] == (1.0, 3.0)
 
 
 def test_bounded_probe_collect_agg_fallback_matches(spark, sf_dir,

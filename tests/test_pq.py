@@ -216,3 +216,30 @@ def test_rerank_partial_table_falls_back_to_adc(spark, corpus, books):
         assert len(rows) == 10, (qid, len(rows))
     # odd ids (ADC-fallback-scored) can still appear in the top-k
     assert all(r.cosine_sim is not None for r in got)
+
+
+def test_codebook_past_default_meta_bound_loads(spark, tmp_path):
+    """A codebook's size is the shape its meta block records, m·n_codes:
+    m=32, n_codes=256 is 8192 rows, twice the catalog's default
+    parameter-table bound, and must load. The default bound still
+    rejects the same table read as an unshaped parameter table, before
+    and after the codebook sits in the row cache."""
+    from australia_company_etl_pipeline_spark import catalog
+
+    m, n_codes = 32, 256
+    path = str(tmp_path / "pqidx")
+    (spark.range(m * n_codes)
+     .selectExpr("cast(id div 256 as int) as subspace",
+                 "cast(id % 256 as int) as code",
+                 "array(cast(id as double), 0.5d) as centroid_vec")
+     .coalesce(1).write.parquet(f"{path}/codebook"))
+    spark.createDataFrame([(m, n_codes, 2 * m)],
+                          "m int, n_codes int, dim int") \
+        .write.parquet(f"{path}/meta")
+    with pytest.raises(ValueError, match="bounded index-parameter"):
+        catalog.read_meta_rows(spark, f"{path}/codebook")
+    books = pq.load_pq_codebook(spark, path)
+    assert len(books) == m and all(len(b) == n_codes for b in books)
+    assert books[31][255] == [8191.0, 0.5]
+    with pytest.raises(ValueError, match="bounded index-parameter"):
+        catalog.read_meta_rows(spark, f"{path}/codebook")

@@ -90,6 +90,51 @@ def test_abr_xml_shreds_name_cascade_and_dates(spark):
     assert str(ind.start_date) == "2001-05-12"    # ISO parsed
 
 
+def _filter_conditions(df) -> list[str]:
+    """SQL of every Filter condition in ``df``'s optimized plan."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().sql())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_er_source_and_clean_filters_read_computed_columns(spark,
+                                                           tmp_path):
+    """Every shredded and cleaned value is computed once per row, in a
+    projection (operators/staging.py ``compute_once``): ``from_xml``
+    appears once in the whole ABR source+clean plan, and no Filter of
+    the source or clean plans re-runs a regex chain or the XML parse —
+    a pushed Filter evaluates its condition with no common
+    subexpression elimination."""
+    from australia_company_etl_pipeline_spark import pipeline
+    from australia_company_etl_pipeline_spark.functions import text as ft
+
+    wet_p, abr_p = tmp_path / "part.warc.wet", tmp_path / "bulk.xml"
+    wet_p.write_text(WET_TEXT)
+    abr_p.write_text(ABR_XML)
+    abr = abr_xml.read_abr_xml(spark, str(abr_p))
+    abr_clean = pipeline.clean_abr_entities(abr, active_only=True)
+    plan = abr_clean._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_xml") == 1
+    assert [r.abn for r in abr_clean.collect()] == ["51824753556"]
+    web = wet.read_wet(spark, str(wet_p))
+    web_clean = pipeline.clean_web_companies(web.select(
+        "url",
+        ft.extract_company_from_text(F.col("text")).alias("company_name"),
+        ft.extract_industry_from_text(F.col("text")).alias("industry")))
+    for df in (web, abr, abr_clean, web_clean):
+        for cond in _filter_conditions(df):
+            assert "regexp_" not in cond and "from_xml" not in cond, cond
+    # the .au gate reads the shredded url: one domain extraction per row
+    au = wet.read_wet(spark, str(wet_p), australian_only=True)
+    assert sum(c.count("regexp_extract")
+               for c in _filter_conditions(au)) == 1
+
+
 def _with_max_partition_bytes(spark, nbytes):
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(nbytes))
